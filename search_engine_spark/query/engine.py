@@ -6,32 +6,44 @@ search_utils.py:104-151 compound must/should, search_utils.py:157-171 boosts,
 pipelines.py:27-42 facet count + skip/limit pagination) — rank-identically to
 the pure-Python oracle.
 
-Two physical strategies:
+One fold scores every term query: ``_fold`` decodes a set of posting blocks,
+computes BM25 per (term, doc) in numpy, sums per doc in ascending posting-key
+order from 0.0, then applies the occur mask (must / minimum-should-match /
+must_not) and the dl boosts.  ``_emit`` turns the folded docs into a PARTIAL
+result — the top ``skip+k`` by (score desc, doc_id asc) or, under ``sort=``,
+by (attribute, nulls last, doc_id); or one winner + count per group; or facet
+bucket counts — always with the matched count.  The driver merges partials.
 
-- ``mode="sort"`` (correctness baseline): decode candidate blocks -> vectorized
-  BM25 -> groupBy(doc_id) with ascending-term-order float summation ->
-  ``orderBy(score desc, doc_id asc).offset(skip).limit(k)``.  Catalyst executes
-  the limit as TakeOrderedAndProject — a per-partition bounded heap + driver
-  k-way merge, which is exactly the distributed top-k the north star asks for.
+Where the fold runs:
 
-- ``mode="wand"`` (block-max pruned): because every term's postings are
-  bucketed on the SAME global doc-id grid (builder.py), per-range score upper
-  bounds can be summed across query terms.  Phase 1 scores the most promising
-  ranges exactly and takes a threshold θ from the running top-k heap; phase 2
-  skips every remaining range — and, inside surviving ranges, every block —
-  whose upper bound is strictly below θ.  Pruning uses strict inequality so
-  θ-ties (which doc_id tiebreaks could still admit) are never dropped:
-  results stay bit-identical to the baseline.
+- driver fast path: a small candidate set is collected and folded at the
+  driver as one range (one Spark job).
+- per-range kernel (every distributed shape): candidate blocks shuffle once
+  keyed by the doc range ``sseg`` — the global doc-id grid every term shares
+  (builder.py) — cogrouped with that range's predicate-pushed, column-pruned
+  doc_stats rows when the query needs doc values.  ``groupBy("sseg")
+  .applyInPandas`` folds each range whole and emits only its partial.  Ranges
+  hold disjoint docs, so the merge is exact: global top-(skip+k) then slice,
+  summed counts, best group winner with summed group counts, summed buckets.
+  The exchange is left to AQE, so a phase runs one coalesced wave of Python
+  tasks.
+- ``mode="wand"`` (block-max pruned): per-range score upper bounds sum across
+  query terms on the shared grid.  Phase 1 folds the most promising ranges
+  and takes θ from their merged top-k; phase 2 folds the rest, skipping every
+  block whose bound plus the other terms' range bounds is strictly below θ —
+  strict inequality keeps θ-ties, so pages stay bit-identical to the unpruned
+  plan.  An exact total counts the pruned blocks from a doc-id-only decode in
+  the same phase-2 pass.
 
-Float determinism: per-doc scores are summed in ascending term order via
-``sort_array(collect_list(struct(term, score)))`` + ``F.aggregate`` — a
-JVM-side deterministic fold, immune to shuffle/partition ordering.
+Float determinism: every placement evaluates the same numpy expression per
+(term, doc) and the same ascending-key fold, so driver, sort and WAND scores
+agree to the bit, whatever the shuffle or partition order.
 """
 
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 import numpy as np
 import pandas as pd
@@ -58,13 +70,220 @@ AVAIL_BOOST = 10.0  # reference search_utils.py:157
 # the engine and every oracle compute it identically from the corpus
 GROUP_MOD = 53
 
-_SCORED_SCHEMA = "doc_id long, term string, score double, dl int"
-
 
 @dataclass
 class SearchResult:
     total: int
     page: pd.DataFrame  # columns: doc_id, score (ranked)
+
+
+@dataclass(frozen=True)
+class _Plan:
+    """Per-query constants of the fold; rides the kernel's closure.
+
+    Clauses are tuples of posting keys; a clause matches a doc holding any
+    of its keys.  ``top`` is the per-range page depth (skip + k).  ``dv``:
+    the range's doc_stats rows are the filter-eligible docs.  ``facets``:
+    label columns on those rows.  The WAND fields prune blocks against
+    ``theta``; ``scored`` limits scoring to those ranges (the rest are only
+    counted) and ``exact_count`` decodes pruned blocks' doc ids for the total.
+    """
+
+    idf: dict
+    avgdl: dict
+    must: tuple = ()
+    should: tuple = ()
+    msm: int = 0
+    must_not: tuple = ()
+    constant_boost: bool = False
+    avail_boost: bool = False
+    top: int = 10
+    group_by: bool = False
+    sort_path: str | None = None
+    sort_desc: bool = True
+    dv: bool = False
+    facets: tuple = ()
+    theta: float | None = None
+    rest_bounds: dict | None = None
+    boost_ceiling: float = 0.0
+    bound_scale: float = 1.0
+    scored: frozenset | None = None
+    exact_count: bool = True
+
+
+def _keep(plan: _Plan, n: int, pos_by: dict) -> np.ndarray:
+    """The occur mask over ``n`` docs; ``pos_by[key]`` = positions of the
+    docs holding that key (Lucene BooleanQuery: every must, >= msm shoulds,
+    no must_not)."""
+    def hit(clause):
+        f = np.zeros(n, dtype=bool)
+        for t in clause:
+            if t in pos_by:
+                f[pos_by[t]] = True
+        return f
+
+    keep = np.ones(n, dtype=bool)
+    for c in plan.must:
+        keep &= hit(c)
+    if plan.msm:
+        keep &= sum(hit(c).astype(np.int64) for c in plan.should) >= plan.msm
+    for c in plan.must_not:
+        keep &= ~hit(c)
+    return keep
+
+
+def _n_matched(plan: _Plan, ids_by_term: dict) -> int:
+    """Matched-doc count from doc ids alone (no float math)."""
+    ids = {t: np.concatenate(v) for t, v in ids_by_term.items()}
+    if not ids:
+        return 0
+    uniq = np.unique(np.concatenate(list(ids.values())))
+    pos_by = {t: np.searchsorted(uniq, v) for t, v in ids.items()}
+    return int(_keep(plan, uniq.size, pos_by).sum())
+
+
+def _fold(plan: _Plan, parts: dict) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """THE scoring fold: ``parts[key]`` = decoded (doc_ids, tfs, dls) blocks
+    -> matched (doc_ids asc, scores, dls).  Scores sum in ascending key
+    order from 0.0, so every caller gets the same floats bit for bit."""
+    if not parts:
+        e = np.empty(0, dtype=np.int64)
+        return e, np.empty(0, dtype=np.float64), e
+    dec = {
+        t: tuple(np.concatenate([p[j] for p in ps]) for j in range(3))
+        for t, ps in parts.items()
+    }
+    uniq = np.unique(np.concatenate([d[0] for d in dec.values()]))
+    acc = np.zeros(uniq.size, dtype=np.float64)
+    dls = np.zeros(uniq.size, dtype=np.int64)
+    pos_by = {}
+    for t in sorted(dec):
+        ids, tfs, dl_i = dec[t]
+        tf = tfs.astype(np.float64)
+        dl = dl_i.astype(np.float64)
+        s = plan.idf.get(t, 0.0) * tf / (tf + K1 * (1.0 - B + B * dl / plan.avgdl[t]))
+        pos = pos_by[t] = np.searchsorted(uniq, ids)
+        acc[pos] = acc[pos] + s
+        dls[pos] = dl_i  # a doc's dl is the same on every posting
+    keep = _keep(plan, uniq.size, pos_by)
+    uniq, acc, dls = uniq[keep], acc[keep], dls[keep]
+    # boost metadata derives from dl (reference A6 constant-score should
+    # clause, constants.py:16; A8 availability boost, search_utils.py:157)
+    if plan.constant_boost:
+        acc = acc + np.where(dls % 37 == 0, CONSTANT_BOOST, 0.0)
+    if plan.avail_boost:
+        acc = acc + np.where(dls % 7 > 0, AVAIL_BOOST, 0.0)
+    return uniq, acc, dls
+
+
+def _emit(plan: _Plan, uniq, acc, dls, stats: pd.DataFrame | None) -> pd.DataFrame:
+    """One range's (or the driver's whole candidate set's) partial result.
+
+    Page rows (doc_id, score, n, g_id[, sort attr]) plus one count row with
+    doc_id -1; facet partials are (facet, bucket, n) rows plus a count row
+    with a null facet.  ``stats``: the range's doc_stats rows (doc_id plus
+    the sort attribute / facet labels)."""
+    if plan.dv:
+        keep = np.isin(uniq, stats["doc_id"].to_numpy())
+        uniq, acc, dls = uniq[keep], acc[keep], dls[keep]
+    if plan.facets:
+        lab = stats[stats["doc_id"].isin(uniq)]
+        rows = [(None, None, int(uniq.size))]
+        for c in plan.facets:
+            rows += [(c, str(b), int(n)) for b, n in lab[c].dropna().value_counts().items()]
+        return pd.DataFrame(rows, columns=["facet", "bucket", "n"])
+    if plan.group_by:
+        # group rollup (reference /v2/search, app.py:488-520): best hit per
+        # g_id + group count.  Winners order on the ROUNDED score (6
+        # decimals, doc_id tiebreak) — the rule every oracle uses — so a
+        # last-ulp difference can't flip a winner; scores stay raw.
+        order = np.lexsort((uniq, -round_half_away(acc, 6)))
+        gid, first, n = np.unique(
+            (dls % GROUP_MOD)[order], return_index=True, return_counts=True
+        )
+        sel = order[first]
+        out = pd.DataFrame({"doc_id": uniq[sel], "score": acc[sel], "n": n, "g_id": gid})
+    elif plan.sort_path is not None:
+        out = pd.DataFrame({"doc_id": uniq, "score": acc}).merge(
+            stats[["doc_id", plan.sort_path]], on="doc_id", how="left"
+        )
+        out = _attr_order(out, plan).head(plan.top).assign(n=0, g_id=0)
+    else:
+        sel = np.lexsort((uniq, -acc))[: plan.top]
+        out = pd.DataFrame({"doc_id": uniq[sel], "score": acc[sel], "n": 0, "g_id": 0})
+    cnt = pd.DataFrame({"doc_id": [-1], "score": [np.nan], "n": [uniq.size], "g_id": [0]})
+    return pd.concat([out, cnt], ignore_index=True)
+
+
+def _attr_order(df: pd.DataFrame, plan: _Plan) -> pd.DataFrame:
+    """Field sort (Atlas $search.sort): attribute, nulls last, doc_id asc."""
+    return df.sort_values(
+        [plan.sort_path, "doc_id"], ascending=[not plan.sort_desc, True],
+        na_position="last",
+    )
+
+
+def _range_partial(plan: _Plan, blocks: pd.DataFrame, stats=None) -> pd.DataFrame:
+    """The per-range kernel: decode -> fold -> partial, for ONE doc range.
+
+    WAND: a block whose bound plus the other terms' range bound is strictly
+    below θ is not scored (the other terms' bound must be added: a doc's
+    score can be split across terms); with ``exact_count`` its doc ids
+    still feed the range's matched count."""
+    if blocks.empty:  # a cogrouped range holding doc_stats rows only
+        return _emit(plan, *_fold(plan, {}), stats)
+    sseg = int(blocks["sseg"].iat[0])
+    in_scope = plan.scored is None or sseg in plan.scored
+    parts: dict = {}
+    ids_all: dict = {}
+    pruned = False
+    for t, mtn, buf in zip(blocks["term"], blocks["max_tf_norm"], blocks["postings"]):
+        cut = not in_scope or (
+            plan.theta is not None
+            and plan.idf.get(t, 0.0) * (mtn * plan.bound_scale)
+            + plan.rest_bounds.get((t, sseg), 0.0) + plan.boost_ceiling
+            < plan.theta
+        )
+        if cut and not plan.exact_count:
+            continue
+        dec = decode_postings(buf)
+        ids_all.setdefault(t, []).append(dec[0])
+        pruned |= cut
+        if not cut:
+            parts.setdefault(t, []).append(dec)
+    out = _emit(plan, *_fold(plan, parts), stats)
+    if pruned:
+        out.loc[out["doc_id"] == -1, "n"] = _n_matched(plan, ids_all)
+    return out
+
+
+def _merge_page(plan: _Plan, parts: pd.DataFrame, k: int, skip: int):
+    """Driver merge of page partials -> (total, page).  Ranges hold
+    disjoint docs: global top-(skip+k) then slice, counts summed, each
+    group's best winner with its summed count."""
+    is_cnt = parts["doc_id"].to_numpy() == -1
+    total = int(parts["n"].to_numpy()[is_cnt].sum())
+    rows = parts[~is_cnt]
+    doc = rows["doc_id"].to_numpy(dtype=np.int64)
+    sc = rows["score"].to_numpy(dtype=np.float64)
+    if plan.group_by:
+        order = np.lexsort((doc, -round_half_away(sc, 6)))
+        g, first, inv = np.unique(
+            rows["g_id"].to_numpy(dtype=np.int64)[order],
+            return_index=True, return_inverse=True,
+        )
+        n = np.bincount(inv, weights=rows["n"].to_numpy()[order]).astype(np.int64)
+        td, ts = doc[order][first], sc[order][first]
+        sel = np.lexsort((td, -round_half_away(ts, 6)))[skip : skip + k]
+        page = pd.DataFrame(
+            {"doc_id": td[sel], "score": ts[sel], "g_id": g[sel], "n_docs": n[sel]}
+        )
+        return int(g.size), page
+    if plan.sort_path is not None:
+        page = _attr_order(rows[["doc_id", "score", plan.sort_path]], plan)
+        return total, page.iloc[skip : skip + k].reset_index(drop=True)
+    order = np.lexsort((doc, -sc))[skip : skip + k]
+    return total, pd.DataFrame({"doc_id": doc[order], "score": sc[order]})
 
 
 def _math_idf(n_docs: int, df: int) -> float:
@@ -152,6 +371,27 @@ def _concat_decoded(parts: dict[str, list]) -> dict[str, tuple]:
     }
 
 
+def _phrase_partial(tseq, max_gap, top, dv, blocks, stats=None) -> pd.DataFrame:
+    """One doc range's phrase partial.  A match's score is a function of
+    its (tf, dl) alone, so per distinct (tf, dl) the range emits a count row
+    (doc_id -1: ``n_all`` matches, ``n`` of them filter-eligible) and its
+    ``top`` smallest eligible doc_ids — exactly the docs of that score class
+    that can reach the global page, whatever idf the global df yields."""
+    parts: dict = {}
+    for t, post, posc in zip(blocks["term"], blocks["postings"], blocks["positions"]):
+        ids, tfs, dls = decode_postings(post)
+        parts.setdefault(t, []).append((ids, tfs, dls, decode_position_lists(posc, tfs)))
+    uniq, tfs, dls, firsts = _phrase_match_arrays(tseq, _concat_decoded(parts), max_gap)
+    m = pd.DataFrame({"tf": tfs, "dl": dls, "doc_id": uniq, "first_pos": firsts})
+    m["n"] = np.isin(uniq, stats["doc_id"].to_numpy()) if dv else True
+    cnt = m.groupby(["tf", "dl"], as_index=False).agg(n_all=("n", "size"), n=("n", "sum"))
+    docs = m[m["n"]].groupby(["tf", "dl"]).head(top)  # uniq is ascending
+    return pd.concat([
+        cnt.assign(doc_id=-1, first_pos=-1),
+        docs.assign(n_all=0, n=0),
+    ], ignore_index=True)[["tf", "dl", "n_all", "n", "doc_id", "first_pos"]]
+
+
 def predict_wand_decode(
     meta: pd.DataFrame,
     idf: dict[str, float],
@@ -192,7 +432,7 @@ def predict_wand_decode(
     m = meta.copy()
     m["ub"] = m["term"].map(idf).fillna(0.0) * (m["mtn"] * bound_scale)
     # θ_lb must be ATTAINED, so it uses the baked mtn times floor_scale —
-    # mirroring _wand_scored's floor.  floor_scale is 1.0 on batch indexes
+    # mirroring _wand's floor.  floor_scale is 1.0 on batch indexes
     # (mtn is exactly what the block-max doc scores); on generational
     # indexes whose cumulative avgdl SHRANK below a generation's build-time
     # avgdl, mtn·min_g(avgdl_now/avgdl_g) is the attained lower bound
@@ -213,7 +453,7 @@ def predict_wand_decode(
             "theta_lb": 0.0, "n_ranges": int(len(rng)),
         }
     theta_lb = float(best_sorted[-k])
-    # phase-1 selection mirrors _wand_scored: ranges by best achievable
+    # phase-1 selection mirrors _wand: ranges by best achievable
     rng_sorted = rng.sort_values("best", ascending=False)
     cum = rng_sorted["dc"].cumsum().to_numpy()
     n1 = int(np.searchsorted(cum, k) + 1)
@@ -340,11 +580,6 @@ class SearchEngine:
         # per-doc attributes stored on doc_stats for Atlas range/equals
         # filter clauses.  Empty = no doc values baked.
         self.docvalues_cols: tuple = tuple(self.stats.get("docvalues_cols") or ())
-        # build-time value histograms for low-cardinality string dv columns
-        # (builder dv_value_stats): power the semi-vs-anti filter-join plan
-        self.docvalues_stats: dict = dict(self.stats.get("docvalues_stats") or {})
-        # observability: the last dv filter plan ({"fraction", "anti"})
-        self.last_dv_plan: dict | None = None
         self._segments_df = spark.read.parquet(self.cat.segments)
         # doc_stats pinned at construction like the segments frame: dv
         # filters / field sorts / facets / url hydration all read it, and
@@ -724,124 +959,6 @@ class SearchEngine:
         return seg.filter(cond)
 
     # --------------------------------------------------------------- scoring
-    def _scored_rows(
-        self,
-        terms: list[str],
-        idf: dict[str, float],
-        ssegs: list[int] | None = None,
-        theta: float | None = None,
-        boost_ceiling: float = 0.0,
-        rest_bounds: dict | None = None,
-        avgdl_map: dict[str, float] | None = None,
-    ) -> DataFrame:
-        """Decode candidate blocks -> per-(doc,term) BM25 partial scores.
-
-        ``rest_bounds[(term, sseg)]`` is the sum of the OTHER query terms'
-        score upper bounds in that doc range: a block of one term can only be
-        pruned against θ after adding what the other terms could still
-        contribute (pruning on the single-term bound alone would wrongly drop
-        docs whose score is split across terms).
-
-        ``avgdl_map`` overrides the corpus avgdl per term — the multi-field
-        path passes each posting key its FIELD's avgdl (Lucene per-field
-        norms); baked block bounds stay sound because the builder bakes with
-        the largest per-field avgdl (tf_norm is monotone in avgdl).
-        """
-        avgdl = self.avgdl
-        bscale = self.bound_scale
-        idf_b = self.spark.sparkContext.broadcast(dict(idf))
-        rb_b = self.spark.sparkContext.broadcast(rest_bounds or {})
-        adl_b = self.spark.sparkContext.broadcast(dict(avgdl_map or {}))
-        th = theta
-
-        def score_blocks(it):
-            idfs = idf_b.value
-            rbs = rb_b.value
-            adls = adl_b.value
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                outs = []
-                terms_col = pdf["term"].to_numpy(dtype=object)
-                sseg_col = pdf["sseg"].to_numpy(dtype=np.int64)
-                mtn = pdf["max_tf_norm"].to_numpy(dtype=np.float64)
-                for i, buf in enumerate(pdf["postings"]):
-                    t = terms_col[i]
-                    w = idfs.get(t, 0.0)
-                    # block-max pruning: skip blocks that cannot reach θ even
-                    # with the other terms' range bounds added
-                    if th is not None:
-                        rest = rbs.get((t, int(sseg_col[i])), 0.0)
-                        if w * (mtn[i] * bscale) + rest + boost_ceiling < th:
-                            continue
-                    doc_ids, tfs, dls = decode_postings(buf)
-                    tf = tfs.astype(np.float64)
-                    dl = dls.astype(np.float64)
-                    adl = adls.get(t, avgdl)
-                    score = w * tf / (tf + K1 * (1.0 - B + B * dl / adl))
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "doc_id": doc_ids,
-                                "term": t,
-                                "score": score,
-                                "dl": dls.astype(np.int32),
-                            }
-                        )
-                    )
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-        segs = self._candidate_segments(terms, ssegs=ssegs)
-        return segs.select("term", "sseg", "max_tf_norm", "postings").mapInPandas(
-            score_blocks, schema=_SCORED_SCHEMA
-        )
-
-    def _scored_docs(
-        self,
-        terms: list[str],
-        idf: dict[str, float],
-        ssegs: list[int] | None = None,
-        theta: float | None = None,
-        boost_ceiling: float = 0.0,
-        rest_bounds: dict | None = None,
-        avgdl_map: dict[str, float] | None = None,
-    ) -> DataFrame:
-        """Per-doc BM25: partial scores folded in ascending term order."""
-        scored = self._scored_rows(
-            terms, idf, ssegs=ssegs, theta=theta, boost_ceiling=boost_ceiling,
-            rest_bounds=rest_bounds, avgdl_map=avgdl_map,
-        )
-        # deterministic ascending-term-order float summation (JVM-side fold)
-        parts = F.sort_array(F.collect_list(F.struct("term", "score")))
-        return (
-            scored.groupBy("doc_id")
-            .agg(parts.alias("parts"), F.max("dl").alias("dl"))
-            .select(
-                "doc_id",
-                F.aggregate(
-                    "parts", F.lit(0.0), lambda acc, x: acc + x["score"]
-                ).alias("score"),
-                F.size("parts").alias("n_terms"),
-                "dl",
-            )
-        )
-
-    def _apply_boosts(
-        self, scored: DataFrame, constant_boost: bool, avail_boost: bool
-    ) -> DataFrame:
-        """Boost metadata (boosted, avail) derives from dl — no join needed.
-
-        Mirrors reference A6 (constant-score should clause, constants.py:16)
-        and A8 (post-search availability boost, search_utils.py:157-165).
-        """
-        s = F.col("score")
-        if constant_boost:
-            s = s + F.when(F.col("dl") % 37 == 0, F.lit(CONSTANT_BOOST)).otherwise(F.lit(0.0))
-        if avail_boost:
-            s = s + F.when(F.col("dl") % 7 > 0, F.lit(AVAIL_BOOST)).otherwise(F.lit(0.0))
-        return scored.withColumn("score", s)
-
     # ------------------------------------------------- driver-side fast path
     # A query whose candidate posting count is tiny relative to the cluster
     # does not earn a shuffle: decode + score at the driver in one collect
@@ -878,12 +995,15 @@ class SearchEngine:
     # fixed term stays ~seconds of job overhead while an unpruned head-term
     # decode at 10^12 docs is 10^10+ rows — hours of CPU — so any strongly
     # prunable query clears MIN_SAVED by orders of magnitude there.
+    # Both were fit to the pre-kernel plan (JVM groupBy fold, separate count
+    # job); the per-range kernel changed both paths' fixed and per-posting
+    # costs and they have NOT been re-fit (that needs the 1M-24M ledgers).
     WAND_DECODE_COST_RATIO = 3.0
     WAND_AUTO_MIN_SAVED = 21_000_000
     # populated by the last mode="auto" dispatch: {"mode", "total_dc",
     # "predicted_dc", "theta_lb", "n_ranges"} — bench/test introspection
     last_dispatch: dict | None = None
-    # populated by the last _wand_scored call that built a full plan:
+    # populated by the last _wand call that built a full plan:
     # {"theta_floor", "theta", "n_ranges", "n_phase1", "n_rest_alive"};
     # reset to None on entry so early-exit WAND paths (empty metadata,
     # clause-filtered range set) never leave a previous query's numbers
@@ -899,91 +1019,85 @@ class SearchEngine:
             >= self.WAND_AUTO_MIN_SAVED
         )
 
-    def _driver_search(
-        self,
-        terms: list[str],
-        idf: dict[str, float],
-        conjunctive: bool,
-        constant_boost: bool,
-        avail_boost: bool,
-        k: int,
-        skip: int,
-        group_by: bool = False,
-        min_should_match: int = 0,
-    ) -> SearchResult:
-        rows = (
-            self._candidate_segments(terms)
-            .select("term", "postings")
-            .collect()
+    def _driver_eval(self, present, plan: _Plan, k: int, skip: int, dv_pred=None):
+        """The fold at the driver over the whole candidate set (one collect)
+        -> (total, page).  A dv filter / field sort probes doc_stats for the
+        matched docs only: predicate-pushed, inner-joined against the small
+        broadcast candidate set — never a collect of the eligible universe."""
+        parts: dict = {}
+        for r in self._candidate_segments(present).select("term", "postings").collect():
+            parts.setdefault(r["term"], []).append(decode_postings(r["postings"]))
+        uniq, acc, dls = _fold(plan, parts)
+        stats = None
+        if plan.dv or plan.sort_path is not None:
+            cols = ["doc_id"] + ([plan.sort_path] if plan.sort_path else [])
+            stats = pd.DataFrame({c: [] for c in cols})
+            if uniq.size:
+                probe = self._doc_stats_df
+                if dv_pred is not None:
+                    probe = probe.filter(dv_pred)
+                cand = self.spark.createDataFrame(
+                    pd.DataFrame({"doc_id": uniq.astype("int64")}), "doc_id long"
+                )
+                stats = probe.join(F.broadcast(cand), "doc_id").select(*cols).toPandas()
+        return _merge_page(plan, _emit(plan, uniq, acc, dls, stats), k, skip)
+
+    def _stats_rows(self, dv_pred, cols) -> DataFrame:
+        """The doc_stats rows a kernel needs, keyed by doc range: filtered
+        by the dv predicate (pushed into the parquet scan), pruned to
+        doc_id plus ``cols``."""
+        df = self._doc_stats_df
+        if dv_pred is not None:
+            df = df.filter(dv_pred)
+        rd = int(self.stats["range_docs"])
+        return df.select(
+            F.expr(f"CAST(doc_id DIV {rd} AS INT)").alias("sseg"), "doc_id", *cols
         )
-        per_term: dict[str, list] = {}
-        for r in rows:
-            per_term.setdefault(r["term"], []).append(r["postings"])
-        # global doc table across matched terms
-        all_ids = []
-        decoded = {}
-        for t in sorted(per_term):
-            bufs = per_term[t]
-            parts = [decode_postings(b) for b in bufs]
-            ids = np.concatenate([p[0] for p in parts])
-            tf = np.concatenate([p[1] for p in parts]).astype(np.float64)
-            dl = np.concatenate([p[2] for p in parts]).astype(np.float64)
-            decoded[t] = (ids, tf, dl)
-            all_ids.append(ids)
-        if not all_ids:
-            return SearchResult(total=0, page=pd.DataFrame({"doc_id": [], "score": []}))
-        uniq = np.unique(np.concatenate(all_ids))
-        acc = np.zeros(uniq.size, dtype=np.float64)
-        nt = np.zeros(uniq.size, dtype=np.int64)
-        dls = np.zeros(uniq.size, dtype=np.int64)
-        # ascending term order — the same fold order as the distributed path
-        for t in sorted(decoded):
-            ids, tf, dl = decoded[t]
-            w = idf.get(t, 0.0)
-            s = w * tf / (tf + K1 * (1.0 - B + B * dl / self.avgdl))
-            pos = np.searchsorted(uniq, ids)
-            acc[pos] = acc[pos] + s
-            nt[pos] += 1
-            np.maximum.at(dls, pos, dl.astype(np.int64))
-        if conjunctive:
-            keep = nt == len(decoded)
-            uniq, acc, dls = uniq[keep], acc[keep], dls[keep]
-        elif min_should_match:
-            # Lucene minimumShouldMatch m-of-n: keep docs matching at least
-            # m of the query's terms (m=1 is the plain disjunction)
-            keep = nt >= min_should_match
-            uniq, acc, dls = uniq[keep], acc[keep], dls[keep]
-        if constant_boost:
-            acc = acc + np.where(dls % 37 == 0, CONSTANT_BOOST, 0.0)
-        if avail_boost:
-            acc = acc + np.where(dls % 7 > 0, AVAIL_BOOST, 0.0)
-        if group_by:
-            # group rollup (reference /v2/search, app.py:488-520): best hit
-            # per g_id, group count, groups ranked by their best hit.
-            # Winner selection and group ranking order on the ROUNDED score
-            # (6 decimals, doc_id tiebreak) — the same rule every oracle
-            # uses — so a last-ulp float difference can't flip a winner
-            # between implementations; reported scores stay raw.
-            gid = (dls % GROUP_MOD).astype(np.int64)
-            accr = round_half_away(acc, 6)
-            order = np.lexsort((uniq, -accr))
-            gs, us, sc = gid[order], uniq[order], acc[order]
-            uniq_g, first_pos, counts = np.unique(gs, return_index=True, return_counts=True)
-            top_doc, top_score = us[first_pos], sc[first_pos]
-            sel = np.lexsort((top_doc, -round_half_away(top_score, 6)))[skip : skip + k]
-            page = pd.DataFrame(
-                {
-                    "doc_id": top_doc[sel],
-                    "score": top_score[sel],
-                    "g_id": uniq_g[sel],
-                    "n_docs": counts[sel],
-                }
+
+    def _scan_ranges(self, present, plan: _Plan, ssegs=None, stats=None) -> pd.DataFrame:
+        """Run the per-range kernel over the candidate blocks (one shuffle
+        keyed by sseg, cogrouped with ``stats`` rows when given) and collect
+        the partials.  The exchange is AQE's to coalesce: one Python wave."""
+        blocks = self._candidate_segments(present, ssegs=ssegs).select(
+            "sseg", "term", "max_tf_norm", "postings"
+        )
+        if plan.facets:
+            schema = "facet string, bucket string, n long"
+        else:
+            schema = "doc_id long, score double, n long, g_id long"
+            if plan.sort_path is not None:
+                typ = self._doc_stats_df.schema[plan.sort_path].dataType
+                schema += f", `{plan.sort_path}` {typ.simpleString()}"
+        if stats is None:
+            out = blocks.groupBy("sseg").applyInPandas(
+                lambda b: _range_partial(plan, b), schema
             )
-            return SearchResult(total=int(uniq_g.size), page=page)
-        total = int(uniq.size)
-        order = np.lexsort((uniq, -acc))[skip : skip + k]
-        page = pd.DataFrame({"doc_id": uniq[order], "score": acc[order]})
-        return SearchResult(total=total, page=page)
+        else:
+            out = blocks.groupBy("sseg").cogroup(stats.groupBy("sseg")).applyInPandas(
+                lambda b, s: _range_partial(plan, b, s), schema
+            )
+        return out.toPandas()
+
+    def _dist_eval(self, present, plan: _Plan, k: int, skip: int, dv_pred=None):
+        """Distributed evaluation -> (total, page): one kernel call."""
+        stats = None
+        if plan.dv or plan.sort_path is not None:
+            stats = self._stats_rows(dv_pred, [plan.sort_path] if plan.sort_path else [])
+        return _merge_page(plan, self._scan_ranges(present, plan, stats=stats), k, skip)
+
+    def _with_urls(self, res: SearchResult) -> SearchResult:
+        """Response hydration (reference search_utils.py:26-59): one isin
+        lookup of the page's doc_ids."""
+        if not len(res.page):
+            return res
+        ids = [int(d) for d in res.page["doc_id"]]
+        urls = (
+            self._doc_stats_df.filter(F.col("doc_id").isin(ids))
+            .select("doc_id", "url").toPandas()
+        )
+        return SearchResult(
+            total=res.total, page=res.page.merge(urls, on="doc_id", how="left")
+        )
 
     # ----------------------------------------------------- multi-field search
     def _clause_terms(self, clause, max_expansions: int | None = None) -> list[str]:
@@ -1106,50 +1220,6 @@ class SearchEngine:
             self._fuzzy_cache.clear()
         self._fuzzy_cache[key] = out
         return list(out)
-
-    def _dv_eligible_fraction(self, clauses) -> float | None:
-        """Estimated fraction of docs an equals/exists clause set keeps,
-        from the build-time value histograms — None when any clause is not
-        estimable (range clauses, unhistogrammed or non-string paths).
-        Multi-clause sets multiply per-clause fractions (independence
-        assumption — fine for the >0.5 plan heuristic this feeds)."""
-        frac = 1.0
-        n = max(1, self.n_docs)
-        for c in clauses:
-            if "equals" in c:
-                h = self.docvalues_stats.get(c["equals"].get("path"))
-                v = c["equals"].get("value")
-                if h is None or not isinstance(v, str):
-                    return None
-                frac *= h["values"].get(v, 0) / n
-            elif "exists" in c:
-                h = self.docvalues_stats.get(c["exists"].get("path"))
-                if h is None:
-                    return None
-                frac *= 1.0 - h["n_null"] / n
-            else:
-                return None
-        return frac
-
-    def _dv_plan(self, clauses):
-        """(pred, anti_pred_or_None): the filter predicate plus, when the
-        histograms say the predicate keeps MOST docs (> 0.5), the null-safe
-        complement ``~coalesce(pred, False)`` — membership sites then
-        anti-join against the small ineligible minority instead of
-        semi-joining against the corpus-sized eligible majority.  The
-        complement is mechanical and exact for ANY predicate: a doc has
-        exactly one doc_stats row, eligible == pred true, and coalesce
-        folds SQL null (attribute missing) into the ineligible side —
-        identical results, measured cheaper (BENCH §9b-2/-3)."""
-        pred = self._dv_predicate(clauses)
-        frac = self._dv_eligible_fraction(clauses)
-        anti = (
-            ~F.coalesce(pred, F.lit(False))
-            if frac is not None and frac > 0.5
-            else None
-        )
-        self.last_dv_plan = {"fraction": frac, "anti": anti is not None}
-        return pred, anti
 
     def _sort_spec(self, sort) -> tuple:
         """Validate an Atlas ``sort`` option against the baked doc-values
@@ -1283,7 +1353,7 @@ class SearchEngine:
         v}}``, ``{"equals": {"path": col, "value": v}}``) over doc-values
         columns baked by ``BuildConfig(docvalues_cols=...)`` — required,
         scoring nothing, evaluated as a predicate-pushed doc_stats scan
-        semi-joined with the term-driven candidates (see
+        intersected with the term-driven candidates (see
         :meth:`_dv_predicate`).  They require at least one term-bearing
         clause: a match set defined by doc values alone is a relational
         scan, which the relational operators already express.
@@ -1340,11 +1410,7 @@ class SearchEngine:
         if prep is None:
             return empty
         must_terms, should_terms = prep["must_terms"], prep["should_terms"]
-        msm, dfs, present = prep["msm"], prep["dfs"], prep["present"]
-        avgdl_map = prep["avgdl_map"]
-        present_must = prep["present_must"]
-        present_should = prep["present_should"]
-        present_must_not = prep["present_must_not"]
+        dfs, present = prep["dfs"], prep["present"]
         # per-key boost = max over the positive clauses naming the key
         weight: dict[str, float] = {}
         for c, ts in zip(list(must) + list(should), must_terms + should_terms):
@@ -1360,6 +1426,8 @@ class SearchEngine:
             # must_not-only keys carry weight 0.0: decoded for membership,
             # contributing exactly nothing to the fold (Lucene MUST_NOT)
             idf[t] = weight.get(t, 0.0) * _math_idf(int(fs["doc_count"]), dfs[t])
+        plan = self._clause_plan(prep, idf, top=skip + k, sort_path=sort_path,
+                                 sort_desc=sort_desc, dv=dv_pred is not None)
 
         wand_meta = None
         if mode == "auto":
@@ -1388,50 +1456,17 @@ class SearchEngine:
                 self.last_dispatch = {"mode": mode, **est}
         if mode == "wand":
             # pure-should msm<=1 == a plain disjunction over the prefixed key
-            # set; _wand_scored prunes with per-field-sound baked bounds
-            # (θ floor active when the index baked per-field mtn — see
-            # _wand_scored / engine.per_field_mtn) and scores with each
-            # key's field avgdl, bit-identical to the sort kernel's fold
-            scored = self._wand_scored(
-                present, idf, conjunctive=False, constant_boost=False,
-                avail_boost=False, k=k, boost_ceiling=0.0,
-                min_should_match=0, avgdl_map=avgdl_map, meta=wand_meta,
-            )
-            ranked = scored.orderBy(F.desc("score"), F.asc("doc_id"))
-            page = (
-                ranked.limit(k).select("doc_id", "score").toPandas()
-                .sort_values(["score", "doc_id"], ascending=[False, True])
-                .reset_index(drop=True)
-            )
-            for df_ in getattr(scored, "_ses_persisted", ()):
-                df_.unpersist()
-            # exact unpruned total: doc-ids-only decode, same as single-field
-            total = self._match_count(present, conjunctive=False)
-            res = SearchResult(total=int(total), page=page)
+            # set; _wand prunes with per-field-sound baked bounds (θ floor
+            # active when the index baked per-field mtn — see _wand /
+            # engine.per_field_mtn) and scores with each key's field avgdl,
+            # bit-identical to the sort kernel's fold; the total is exact
+            total, page = _merge_page(plan, self._wand(present, plan, k, wand_meta), k, 0)
         elif not force_distributed and sum(dfs.values()) <= self.SMALL_QUERY_POSTINGS:
-            res = self._driver_search_fields(
-                present, idf, avgdl_map, present_must, present_should, msm, k, skip,
-                must_not_terms=present_must_not, dv_pred=dv_pred,
-                sort_path=sort_path, sort_desc=sort_desc,
-            )
+            total, page = self._driver_eval(present, plan, k, skip, dv_pred)
         else:
-            res = self._dist_search_fields(
-                present, idf, avgdl_map, present_must, present_should, msm, k, skip,
-                must_not_terms=present_must_not, dv_pred=dv_pred,
-                sort_path=sort_path, sort_desc=sort_desc,
-            )
-        if with_url and len(res.page):
-            ids = [int(d) for d in res.page["doc_id"]]
-            urls = (
-                self._doc_stats_df
-                .filter(F.col("doc_id").isin(ids))
-                .select("doc_id", "url")
-                .toPandas()
-            )
-            res = SearchResult(
-                total=res.total, page=res.page.merge(urls, on="doc_id", how="left")
-            )
-        return res
+            total, page = self._dist_eval(present, plan, k, skip, dv_pred)
+        res = SearchResult(total=total, page=page)
+        return self._with_urls(res) if with_url else res
 
     def facet_fields(
         self,
@@ -1448,9 +1483,9 @@ class SearchEngine:
 
         Evaluates the same compound clause set as :meth:`search_fields`
         (all four occur types, dv filter operators) but returns bucket
-        counts over the MATCHED set instead of a ranked page — scoring
-        never happens, so there is no driver fast path to dispatch: facets
-        are an analytic aggregation, served distributed.
+        counts over the MATCHED set instead of a ranked page — nothing is
+        ranked, so there is no driver fast path to dispatch: facets are an
+        analytic aggregation, served by the per-range kernel.
 
         ``facets`` maps facet names to Atlas facet specs over doc-values
         columns:
@@ -1537,16 +1572,14 @@ class SearchEngine:
                 },
             }
 
+        # membership only: unit weights, the scores are thrown away
         if keyword is not None:
             terms = sorted(set(preprocess_query(keyword)))
-            dfs = self.term_dfs(terms) if terms else {}
-            present = sorted(dfs)
+            present = sorted(self.term_dfs(terms)) if terms else []
             if not present:
                 return _empty()
-            # membership only — unit idf, scores thrown away
-            kept = self._scored_docs(
-                present, {t: 1.0 for t in present}
-            ).select("doc_id")
+            plan = _Plan(idf=dict.fromkeys(present, 1.0),
+                         avgdl=dict.fromkeys(present, self.avgdl))
         else:
             prep = self._compound_prep(
                 must, should, must_not, filter, minimum_should_match,
@@ -1555,31 +1588,11 @@ class SearchEngine:
             if prep is None:
                 return _empty()
             present = prep["present"]
-            # membership only — decode with unit idf, throw the scores away
-            scored = self._scored_rows(
-                present, {t: 1.0 for t in present}, avgdl_map=prep["avgdl_map"]
-            )
-            agg = scored.groupBy("doc_id").agg(
-                F.sort_array(F.collect_set("term")).alias("ts")
-            )
-            kept = agg.filter(
-                self._occur_cond(
-                    prep["present_must"], prep["present_should"], prep["msm"],
-                    prep["present_must_not"],
-                )
-            ).select("doc_id")
-        paths = sorted({p for _, p, _ in specs.values()})
-        stats_df = self._doc_stats_df
-        if dv_pred is not None:
-            kept = kept.join(
-                stats_df.filter(dv_pred).select("doc_id"), "doc_id", "semi"
-            )
-        joined = kept.join(
-            stats_df.select("doc_id", *paths), "doc_id", "left"
-        ).persist()
-        count = joined.count()
-        out: dict = {"count": int(count), "facet": {}}
-        for name, (kind, path, arg) in specs.items():
+            plan = self._clause_plan(prep, dict.fromkeys(present, 1.0))
+        # bucket labels are computed JVM-side on the doc_stats rows that
+        # ride the kernel's shuffle; the kernel counts the matched docs' labels
+        labels = []
+        for i, (kind, path, arg) in enumerate(specs.values()):
             col = F.col(path)
             if kind == "number":
                 bounds, default = arg
@@ -1595,134 +1608,32 @@ class SearchEngine:
                         (col >= F.lit(lo)) & (col < F.lit(hi)),
                         F.lit(str(lo)),
                     ).otherwise(lab)
-                buckets = (
-                    joined.select(lab.alias("bucket"))
-                    .filter(F.col("bucket").isNotNull())
-                    .groupBy("bucket").count()
-                    .orderBy(F.asc("bucket"))
-                    .toPandas()
-                )
+            else:
+                lab = col.cast("string")
+            labels.append(lab.alias(f"_f{i}"))
+        plan = replace(plan, dv=dv_pred is not None,
+                       facets=tuple(f"_f{i}" for i in range(len(specs))))
+        parts = self._scan_ranges(present, plan, stats=self._stats_rows(dv_pred, labels))
+        out: dict = {"count": int(parts.loc[parts["facet"].isna(), "n"].sum()), "facet": {}}
+        for i, (name, (kind, _, arg)) in enumerate(specs.items()):
+            buckets = (
+                parts[parts["facet"] == f"_f{i}"].groupby("bucket", as_index=False)["n"]
+                .sum().rename(columns={"n": "count"}).astype({"count": np.int64})
+            )
+            if kind == "number":
                 # deterministic order: lower-bound labels ascending, the
                 # default bucket (if any) last
-                order = {str(b): i for i, b in enumerate(bounds)}
+                bounds, default = arg
+                order = {str(b): j for j, b in enumerate(bounds)}
                 if default is not None:
                     order[default] = len(bounds)
-                buckets = buckets.sort_values(
-                    "bucket", key=lambda s: s.map(order)
-                ).reset_index(drop=True)
+                buckets = buckets.sort_values("bucket", key=lambda s: s.map(order))
             else:
-                buckets = (
-                    joined.filter(col.isNotNull())
-                    .groupBy(col.cast("string").alias("bucket")).count()
-                    .orderBy(F.desc("count"), F.asc("bucket"))
-                    .limit(arg)
-                    .toPandas()
-                    .sort_values(
-                        ["count", "bucket"], ascending=[False, True]
-                    )
-                    .reset_index(drop=True)
-                )
-            out["facet"][name] = buckets
-        joined.unpersist()
+                buckets = buckets.sort_values(
+                    ["count", "bucket"], ascending=[False, True]
+                ).head(arg)
+            out["facet"][name] = buckets.reset_index(drop=True)
         return out
-
-    def _driver_search_fields(
-        self, present, idf, avgdl_map, must_terms, should_terms, msm, k, skip,
-        must_not_terms=(), dv_pred=None, sort_path=None, sort_desc=True,
-    ) -> SearchResult:
-        """Driver-side compound evaluation (small candidate sets)."""
-        rows = self._candidate_segments(present).select("term", "postings").collect()
-        per_term: dict[str, list] = {}
-        for r in rows:
-            per_term.setdefault(r["term"], []).append(r["postings"])
-        decoded = {}
-        all_ids = []
-        for t in sorted(per_term):
-            parts = [decode_postings(b) for b in per_term[t]]
-            ids = np.concatenate([p[0] for p in parts])
-            tf = np.concatenate([p[1] for p in parts]).astype(np.float64)
-            dl = np.concatenate([p[2] for p in parts]).astype(np.float64)
-            decoded[t] = (ids, tf, dl)
-            all_ids.append(ids)
-        # the empty page keeps the documented shape: sorted results carry
-        # the sort attribute column even when nothing matched
-        empty_cols: dict = {"doc_id": [], "score": []}
-        if sort_path is not None:
-            empty_cols[sort_path] = []
-        empty = SearchResult(total=0, page=pd.DataFrame(empty_cols))
-        if not all_ids:
-            return empty
-        uniq = np.unique(np.concatenate(all_ids))
-        acc = np.zeros(uniq.size, dtype=np.float64)
-        has = {}
-        # ascending posting-key order — the same fold as the distributed path
-        for t in sorted(decoded):
-            ids, tf, dl = decoded[t]
-            s = idf[t] * tf / (tf + K1 * (1.0 - B + B * dl / avgdl_map[t]))
-            pos = np.searchsorted(uniq, ids)
-            acc[pos] = acc[pos] + s
-            flag = np.zeros(uniq.size, dtype=bool)
-            flag[pos] = True
-            has[t] = flag
-        def clause_ok(ts):
-            ok = np.zeros(uniq.size, dtype=bool)
-            for t in ts:
-                if t in has:
-                    ok |= has[t]
-            return ok
-        keep = np.ones(uniq.size, dtype=bool)
-        for ts in must_terms:
-            keep &= clause_ok(ts)
-        if msm:
-            n_should = np.zeros(uniq.size, dtype=np.int64)
-            for ts in should_terms:
-                n_should += clause_ok(ts).astype(np.int64)
-            keep &= n_should >= msm
-        for ts in must_not_terms:  # Lucene MUST_NOT: any hit excludes the doc
-            keep &= ~clause_ok(ts)
-        uniq, acc = uniq[keep], acc[keep]
-        attrs = None
-        if (dv_pred is not None or sort_path is not None) and uniq.size:
-            # ONE predicate-pushed doc_stats probe serves both the dv filter
-            # (membership) and the field sort (attribute values): the scan
-            # is filtered when a predicate exists, semi-join semantics come
-            # from the inner join against the (small, broadcast) candidate
-            # set — never a collect of the eligible universe
-            cand = self.spark.createDataFrame(
-                pd.DataFrame({"doc_id": uniq.astype("int64")})
-            )
-            probe = self._doc_stats_df
-            if dv_pred is not None:
-                probe = probe.filter(dv_pred)
-            cols = ["doc_id"] + ([sort_path] if sort_path is not None else [])
-            attrs = (
-                probe.join(F.broadcast(cand), "doc_id", "inner")
-                .select(*cols)
-                .toPandas()
-            )
-            if dv_pred is not None:
-                dv_keep = np.isin(uniq, attrs["doc_id"].to_numpy())
-                uniq, acc = uniq[dv_keep], acc[dv_keep]
-        if uniq.size == 0:
-            return empty
-        if sort_path is not None:
-            # order (attr, doc_id asc) with nulls last in pandas
-            page = (
-                pd.DataFrame({"doc_id": uniq, "score": acc})
-                .merge(attrs, on="doc_id", how="left")
-                .sort_values(
-                    [sort_path, "doc_id"], ascending=[not sort_desc, True],
-                    na_position="last",
-                )
-                .iloc[skip : skip + k]
-                .reset_index(drop=True)[["doc_id", "score", sort_path]]
-            )
-            return SearchResult(total=int(uniq.size), page=page)
-        order = np.lexsort((uniq, -acc))[skip : skip + k]
-        return SearchResult(
-            total=int(uniq.size),
-            page=pd.DataFrame({"doc_id": uniq[order], "score": acc[order]}),
-        )
 
     def _compound_prep(
         self, must, should, must_not, filter, minimum_should_match,
@@ -1790,95 +1701,14 @@ class SearchEngine:
         }
 
     @staticmethod
-    def _occur_cond(must_terms, should_terms, msm, must_not_terms):
-        """All four BooleanQuery occur types as ONE JVM array predicate over
-        a per-doc matched-key array column ``ts`` (must+filter required,
-        >= msm shoulds, no must_not)."""
-        def clause_ok(ts):
-            return F.arrays_overlap(F.col("ts"), F.array(*[F.lit(t) for t in ts]))
-        cond = F.lit(True)
-        for ts in must_terms:
-            cond = cond & clause_ok(ts)
-        if msm:
-            n_should = sum(
-                (clause_ok(ts).cast("int") for ts in should_terms), F.lit(0)
-            )
-            cond = cond & (n_should >= msm)
-        for ts in must_not_terms:  # Lucene MUST_NOT: any hit excludes the doc
-            cond = cond & ~clause_ok(ts)
-        return cond
-
-    def _dist_search_fields(
-        self, present, idf, avgdl_map, must_terms, should_terms, msm, k, skip,
-        must_not_terms=(), dv_pred=None, sort_path=None, sort_desc=True,
-    ) -> SearchResult:
-        """Distributed compound evaluation: one decode+score pass, clause
-        logic as JVM array expressions over the per-doc matched-key set."""
-        scored = self._scored_rows(present, idf, avgdl_map=avgdl_map)
-        parts = F.sort_array(F.collect_list(F.struct("term", "score")))
-        agg = scored.groupBy("doc_id").agg(parts.alias("parts"))
-        ts_col = F.transform(F.col("parts"), lambda x: x["term"])
-        agg = agg.select(
-            "doc_id",
-            F.aggregate("parts", F.lit(0.0), lambda a, x: a + x["score"]).alias("score"),
-            ts_col.alias("ts"),
+    def _clause_plan(prep: dict, idf: dict, **kw) -> _Plan:
+        """The fold plan of a prepared compound clause set."""
+        return _Plan(
+            idf=idf, avgdl=prep["avgdl_map"],
+            must=tuple(map(tuple, prep["present_must"])),
+            should=tuple(map(tuple, prep["present_should"])), msm=prep["msm"],
+            must_not=tuple(map(tuple, prep["present_must_not"])), **kw,
         )
-        kept = agg.filter(
-            self._occur_cond(must_terms, should_terms, msm, must_not_terms)
-        ).select("doc_id", "score")
-        if dv_pred is not None and sort_path is not None:
-            # ONE predicate-pushed, column-pruned doc_stats scan serves both
-            # the dv filter and the field sort: the inner join IS the
-            # semi-join (doc_id is unique per side) and attaches the sort
-            # attribute in the same pass
-            kept = kept.join(
-                self._doc_stats_df
-                .filter(dv_pred).select("doc_id", sort_path),
-                "doc_id", "inner",
-            )
-        elif dv_pred is not None:
-            # doc-values filter: predicate pushes into the doc_stats parquet
-            # scan (only the filtered columns are read); the semi-join keys
-            # on doc_id and shrinks with the predicate's selectivity — AQE
-            # broadcasts the eligible side when it is small
-            kept = kept.join(
-                self._doc_stats_df
-                .filter(dv_pred).select("doc_id"),
-                "doc_id", "semi",
-            )
-        elif sort_path is not None:
-            # field sort alone: attach the attribute (column-pruned scan);
-            # left join keeps null-attribute docs, which sort last
-            kept = kept.join(
-                self._doc_stats_df
-                .select("doc_id", sort_path),
-                "doc_id", "left",
-            )
-        kept = kept.persist()
-        if sort_path is not None:
-            # field sort (Atlas $search.sort): order by the attribute, nulls
-            # last, doc_id tiebreak — score-bound pruning never applies here
-            ranked = kept.orderBy(
-                F.desc_nulls_last(sort_path) if sort_desc
-                else F.asc_nulls_last(sort_path),
-                F.asc("doc_id"),
-            )
-        else:
-            ranked = kept.orderBy(F.desc("score"), F.asc("doc_id"))
-        page_df = ranked.offset(skip).limit(k) if skip else ranked.limit(k)
-        page = page_df.toPandas()
-        if sort_path is not None:
-            page = page.sort_values(
-                [sort_path, "doc_id"], ascending=[not sort_desc, True],
-                na_position="last",
-            ).reset_index(drop=True)[["doc_id", "score", sort_path]]
-        else:
-            page = page.sort_values(
-                ["score", "doc_id"], ascending=[False, True]
-            ).reset_index(drop=True)
-        total = kept.count()
-        kept.unpersist()
-        return SearchResult(total=int(total), page=page)
 
     # ------------------------------------------------------------ highlight
     def _highlight_page(self, terms: list[str], doc_ids: list[int]) -> pd.DataFrame:
@@ -1962,53 +1792,32 @@ class SearchEngine:
             parts.setdefault(r["term"], []).append((ids, tfs, dls, pos))
         return _concat_decoded(parts)
 
-    def _phrase_matched_dist(self, terms_seq: list[str], max_gap: int = 0) -> DataFrame:
-        """Distributed phrase match -> (doc_id, tf, dl) of matching docs.
+    def _phrase_dist_partials(self, terms_seq, max_gap, top, dv_pred) -> pd.DataFrame:
+        """Distributed phrase match -> the ranges' ``_phrase_partial`` rows.
 
         Candidate blocks (the phrase terms' postings + positions only)
         shuffle ONCE keyed by ``sseg`` — the shared doc-id grid guarantees
-        every term's blocks for a doc range land in the same task, so the
+        every term's blocks for a doc range land in the same group, so the
         kernel intersects complete per-doc evidence with no further
-        exchange.  Work and shuffle are O(candidate blocks of the m query
-        terms), never corpus-sized; composite keys stay kernel-local, so
-        per-partition strides may differ.
-
-        Eligibility pruning: a doc range (sseg) can only contain the phrase
-        if EVERY distinct term has a block there, so ssegs missing any term
-        are dropped by a self-semi-join on block METADATA before the
-        postings/positions bytes are ever read — for a head+rare phrase
-        ("the <rare>") this skips decoding almost all of the head term's
-        candidate blocks.  The metadata aggregation touches only (term,
-        sseg) columns; its result (≤ #ssegs rows) broadcasts.
+        exchange (cogrouped with the range's dv-eligible doc_stats rows
+        under a filter).  Work and shuffle are O(candidate blocks of the m
+        query terms), never corpus-sized; composite keys stay kernel-local,
+        so per-range strides may differ.  The exchange is AQE's to
+        coalesce: one wave of Python tasks, and no cached intermediate.
         """
         segs = self._phrase_candidate_blocks(sorted(set(terms_seq)))
-        terms_b = self.spark.sparkContext.broadcast((list(terms_seq), int(max_gap)))
-
-        def match(it):
-            pdfs = [p for p in it if len(p)]
-            if not pdfs:
-                return
-            pdf = pd.concat(pdfs, ignore_index=True)
-            parts: dict[str, list] = {}
-            tcol = pdf["term"].to_numpy(dtype=object)
-            post, posc = pdf["postings"], pdf["positions"]
-            for i in range(len(pdf)):
-                ids, tfs, dls = decode_postings(post.iat[i])
-                pos = decode_position_lists(posc.iat[i], tfs)
-                parts.setdefault(tcol[i], []).append((ids, tfs, dls, pos))
-            tseq, g = terms_b.value
-            uniq, tfs_, dls_, firsts_ = _phrase_match_arrays(
-                tseq, _concat_decoded(parts), max_gap=g
+        tseq, dv = list(terms_seq), dv_pred is not None
+        schema = "tf long, dl long, n_all long, n long, doc_id long, first_pos long"
+        grouped = segs.groupBy("sseg")
+        if dv:
+            out = grouped.cogroup(self._stats_rows(dv_pred, []).groupBy("sseg")).applyInPandas(
+                lambda b, s: _phrase_partial(tseq, max_gap, top, True, b, s), schema
             )
-            if uniq.size:
-                yield pd.DataFrame(
-                    {"doc_id": uniq, "tf": tfs_, "dl": dls_, "first_pos": firsts_}
-                )
-
-        n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        return segs.repartition(n, "sseg").mapInPandas(
-            match, schema="doc_id long, tf long, dl long, first_pos long"
-        )
+        else:
+            out = grouped.applyInPandas(
+                lambda b: _phrase_partial(tseq, max_gap, top, False, b), schema
+            )
+        return out.toPandas()
 
     def search_field_phrase(
         self,
@@ -2162,63 +1971,30 @@ class SearchEngine:
                 page["first_pos"] = firsts[order]
             res = SearchResult(total=int(uniq.size), page=page)
         else:
-            matched = self._phrase_matched_dist(terms_seq, max_gap=max_gap).persist()
-            df_phrase = matched.count()  # == phrase df: exact total for free
-            if df_phrase == 0:
-                matched.unpersist()
+            parts = self._phrase_dist_partials(terms_seq, max_gap, skip + k, dv_pred)
+            cnt = parts["doc_id"].to_numpy() == -1
+            df_phrase = int(parts["n_all"].to_numpy()[cnt].sum())  # exact phrase df
+            total = int(parts["n"].to_numpy()[cnt].sum())  # filtered match count
+            if total == 0:
                 return empty
-            # idf from the UNfiltered phrase df (FILTER scores nothing);
-            # total = the filtered match count (FILTER constrains matching)
-            w = _math_idf(n_docs, int(df_phrase))
-            total = df_phrase
-            if dv_pred is not None:
-                matched = matched.join(
-                    self._doc_stats_df
-                    .filter(dv_pred).select("doc_id"),
-                    "doc_id", "semi",
-                ).persist()
-                total = matched.count()
-                if total == 0:
-                    matched.unpersist()
-                    return empty
-            tfd = F.col("tf").cast("double")
-            dld = F.col("dl").cast("double")
-            # operand-for-operand the driver path's numpy expression tree
-            score = F.lit(w) * tfd / (
-                tfd
-                + F.lit(K1) * (F.lit(1.0) - F.lit(B) + F.lit(B) * dld / F.lit(avgdl))
-            )
-            scored = self._apply_boosts(
-                matched.select(
-                    "doc_id", score.alias("score"),
-                    F.col("dl").cast("int").alias("dl"), "first_pos",
-                ),
-                constant_boost,
-                avail_boost,
-            )
-            hl_cols = ["first_pos"] if highlight else []
-            ranked = scored.orderBy(F.desc("score"), F.asc("doc_id"))
-            page_df = ranked.offset(skip).limit(k) if skip else ranked.limit(k)
-            page = (
-                page_df.select("doc_id", "score", *hl_cols)
-                .toPandas()
-                .sort_values(["score", "doc_id"], ascending=[False, True])
-                .reset_index(drop=True)
-            )
-            matched.unpersist()
-            res = SearchResult(total=int(total), page=page)
-        if with_url and len(res.page):
-            ids = [int(d) for d in res.page["doc_id"]]
-            urls = (
-                self._doc_stats_df
-                .filter(F.col("doc_id").isin(ids))
-                .select("doc_id", "url")
-                .toPandas()
-            )
-            res = SearchResult(
-                total=res.total, page=res.page.merge(urls, on="doc_id", how="left")
-            )
-        return res
+            rows = parts[~cnt]
+            uniq, dls = rows["doc_id"].to_numpy(), rows["dl"].to_numpy()
+            tf = rows["tf"].to_numpy(dtype=np.float64)
+            dl = dls.astype(np.float64)
+            # idf from the UNfiltered phrase df (FILTER scores nothing); the
+            # same numpy expression tree as the driver path above
+            w = _math_idf(n_docs, df_phrase)
+            acc = w * tf / (tf + K1 * (1.0 - B + B * dl / avgdl))
+            if constant_boost:
+                acc = acc + np.where(dls % 37 == 0, CONSTANT_BOOST, 0.0)
+            if avail_boost:
+                acc = acc + np.where(dls % 7 > 0, AVAIL_BOOST, 0.0)
+            order = np.lexsort((uniq, -acc))[skip : skip + k]
+            page = pd.DataFrame({"doc_id": uniq[order], "score": acc[order]})
+            if highlight:
+                page["first_pos"] = rows["first_pos"].to_numpy()[order]
+            res = SearchResult(total=total, page=page)
+        return self._with_urls(res) if with_url else res
 
     # ---------------------------------------------------------------- search
     def search(self, keyword: str, **kwargs) -> SearchResult:
@@ -2328,8 +2104,8 @@ class SearchEngine:
         """``total_mode`` governs the facet total under WAND pruning.
 
         WAND prunes the scored set, so the exact disjunctive total needs a
-        doc-id-only decode of every matched term's postings
-        (``_match_count``) — for a head-term query over 10^13 postings that
+        doc-id-only decode of every pruned block (done inside WAND's phase-2
+        kernel pass) — for a head-term query over 10^13 postings that
         decode dominates the query.  Shortcuts: a single matched term's
         total IS its precomputed df (always exact, zero decode);
         ``total_mode="approx"`` serves multi-term disjunctive queries the
@@ -2447,10 +2223,16 @@ class SearchEngine:
         # metacharacters, so the pattern bypasses preprocess_query (Lucene
         # wildcard queries are not analyzed either); exact_terms callers
         # (more_like_this) did their own analysis
+        # an empty page keeps the documented shape: a sorted page carries
+        # the sort attribute column even when nothing matched
+        empty_cols: dict = {"doc_id": [], "score": []}
+        if sort_path is not None:
+            empty_cols[sort_path] = []
+        empty = SearchResult(total=0, page=pd.DataFrame(empty_cols))
         raw = wildcard or regex or exact_terms is not None
         terms = preprocess_query(keyword) if not raw else []
         if not raw and not terms:
-            return SearchResult(total=0, page=pd.DataFrame({"doc_id": [], "score": []}))
+            return empty
         single = len(terms) == 1
         if exact_terms is not None:
             # a plain disjunction (or conjunction) over a caller-analyzed
@@ -2508,222 +2290,74 @@ class SearchEngine:
             match_terms = sorted(set(terms))
             conj = conjunctive
         if not match_terms:
-            return SearchResult(total=0, page=pd.DataFrame({"doc_id": [], "score": []}))
+            return empty
 
         dfs = self.term_dfs(match_terms)
         if conj and len(dfs) < len(match_terms):
             # a required term is absent from the corpus -> empty intersection
-            return SearchResult(total=0, page=pd.DataFrame({"doc_id": [], "score": []}))
+            return empty
         present = sorted(dfs)
         if not present:
-            return SearchResult(total=0, page=pd.DataFrame({"doc_id": [], "score": []}))
+            return empty
         idf = {t: _math_idf(self.n_docs, d) for t, d in dfs.items()}
-
-        if (not force_distributed and dv_pred is None and sort_path is None
-                and sum(dfs.values()) <= self.SMALL_QUERY_POSTINGS):
-            res = self._driver_search(
-                present, idf, conj, constant_boost, avail_boost, k, skip,
-                group_by=group_by, min_should_match=msm,
-            )
-            if highlight and len(res.page):
-                hl = self._highlight_page(present, [int(d) for d in res.page["doc_id"]])
-                res = SearchResult(
-                    total=res.total, page=res.page.merge(hl, on="doc_id", how="left")
-                )
-            if with_url and len(res.page):
-                ids = [int(d) for d in res.page["doc_id"]]
-                urls = (
-                    self._doc_stats_df
-                    .filter(F.col("doc_id").isin(ids))
-                    .select("doc_id", "url")
-                    .toPandas()
-                )
-                res = SearchResult(
-                    total=res.total, page=res.page.merge(urls, on="doc_id", how="left")
-                )
-            return res
-
+        # single-field terms as one-key clauses: conjunctive = every term a
+        # must clause; min_should_match = m of the terms as should clauses
+        plan = _Plan(
+            idf=idf, avgdl=dict.fromkeys(present, self.avgdl),
+            must=tuple((t,) for t in present) if conj else (),
+            should=tuple((t,) for t in present) if msm else (), msm=msm,
+            constant_boost=constant_boost, avail_boost=avail_boost,
+            top=skip + k, group_by=group_by, sort_path=sort_path,
+            sort_desc=sort_desc, dv=dv_pred is not None,
+        )
         boost_ceiling = (CONSTANT_BOOST if constant_boost else 0.0) + (
             AVAIL_BOOST if avail_boost else 0.0
         )
-
-        # mode="auto": metadata-only cost model (predict_wand_decode) picks
-        # the physical strategy.  WAND pays an extra Spark job + a two-branch
-        # union AND a ~3x per-posting decode premium, so it must earn its
-        # keep by pruning hard; the measured crossover (BENCH §3c + the
-        # compound A/B) sits where total - 3*predicted clears the fixed cost.
-        wand_meta = None
-        if mode == "auto":
-            if skip != 0 or group_by or dv_pred is not None or sort_path is not None:
-                mode = "sort"  # WAND is unsound for these; no estimate needed
+        if (not force_distributed and dv_pred is None and sort_path is None
+                and sum(dfs.values()) <= self.SMALL_QUERY_POSTINGS):
+            total, page = self._driver_eval(present, plan, k, skip)
+        else:
+            # mode="auto": metadata-only cost model (predict_wand_decode)
+            # picks the physical strategy.  WAND pays an extra kernel pass
+            # AND a ~3x per-posting decode premium, so it must earn its keep
+            # by pruning hard (see WAND_DECODE_COST_RATIO).
+            wand_meta = None
+            if mode == "auto":
+                if skip or group_by or dv_pred is not None or sort_path is not None:
+                    mode = "sort"  # WAND is unsound for these; no estimate needed
+                else:
+                    wand_meta = self._wand_meta(present)
+                    est = predict_wand_decode(
+                        wand_meta, idf, k, self.bound_scale, boost_ceiling,
+                        floor_scale=self.floor_scale,
+                    )
+                    mode = "wand" if self._pick_wand(est) else "sort"
+                    self.last_dispatch = {"mode": mode, **est}
+            # grouped rollup needs every doc's exact score (a group's winner
+            # can sit below the doc-level top-k that WAND's θ prunes
+            # against), so it rides the full-scoring path
+            if mode == "wand" and skip == 0 and not group_by:
+                # the total (the reference's $facet count) must count the
+                # pruned docs too.  Single matched term: its df, already in
+                # hand; approx mode: the Σdf / min(df) upper bound; else the
+                # exact count from phase 2's doc-id-only decode
+                exact = total_mode != "approx" and (len(present) > 1 or msm)
+                total, page = _merge_page(plan, self._wand(
+                    present, plan, k, wand_meta, boost_ceiling, exact,
+                ), k, 0)
+                if len(present) == 1 and not msm:
+                    total = int(dfs[present[0]])
+                elif not exact:
+                    # conjunctive: intersection <= smallest df (tight bound)
+                    total = (int(min(dfs.values())) if conj
+                             else min(int(sum(dfs.values())), self.n_docs))
             else:
-                wand_meta = self._wand_meta(present)
-                est = predict_wand_decode(
-                    wand_meta, idf, k, self.bound_scale, boost_ceiling,
-                    floor_scale=self.floor_scale,
-                )
-                mode = "wand" if self._pick_wand(est) else "sort"
-                self.last_dispatch = {"mode": mode, **est}
-
-        # grouped rollup needs every doc's exact score (a group's winner can
-        # sit below the doc-level top-k that WAND's θ prunes against), so it
-        # rides the full-scoring sort path
-        wand = mode == "wand" and skip == 0 and not group_by
-        if wand:
-            scored = self._wand_scored(
-                present, idf, conj, constant_boost, avail_boost, k,
-                boost_ceiling, min_should_match=msm, meta=wand_meta,
-            )
-        else:
-            scored = self._scored_docs(present, idf)
-            if conj:
-                scored = scored.filter(F.col("n_terms") == len(present))
-            elif msm:
-                scored = scored.filter(F.col("n_terms") >= msm)
-            scored = self._apply_boosts(scored, constant_boost, avail_boost)
-            if dv_pred is not None and sort_path is not None:
-                # ONE filtered, column-pruned doc_stats scan serves both:
-                # the inner join IS the semi-join with the attribute attached
-                scored = scored.join(
-                    self._doc_stats_df
-                    .filter(dv_pred).select("doc_id", sort_path),
-                    "doc_id", "inner",
-                )
-            elif dv_pred is not None:
-                scored = scored.join(
-                    self._doc_stats_df
-                    .filter(dv_pred).select("doc_id"),
-                    "doc_id", "semi",
-                )
-            elif sort_path is not None:
-                # left join keeps null-attribute docs; they sort last
-                scored = scored.join(
-                    self._doc_stats_df
-                    .select("doc_id", sort_path),
-                    "doc_id", "left",
-                )
-            if group_by:
-                scored = self._group_rollup(scored)
-            # one-pass count + page over a single cached plan — the Spark
-            # equivalent of the reference's $facet {total, data}
-            # (pipelines.py:27-42)
-            scored = scored.persist()
-
-        # grouped results rank on the rounded score (the shared oracle rule;
-        # real 6-decimal ties exist between group winners); doc-level pages
-        # keep the raw order that the rank-identity suite pins; field sorts
-        # rank on the attribute (nulls last, doc_id tiebreak)
-        if sort_path is not None:
-            ranked = scored.orderBy(
-                F.desc_nulls_last(sort_path) if sort_desc
-                else F.asc_nulls_last(sort_path),
-                F.asc("doc_id"),
-            )
-        else:
-            score_key = F.round("score", 6) if group_by else F.col("score")
-            ranked = scored.orderBy(F.desc(score_key), F.asc("doc_id"))
-        page_df = ranked.offset(skip).limit(k) if skip else ranked.limit(k)
-        if with_url:
-            urls = self._doc_stats_df.select("doc_id", "url")
-            page_df = page_df.join(urls, "doc_id", "left")
-        page_cols = (
-            (["g_id", "n_docs"] if group_by else [])
-            + (["url"] if with_url else [])
-            + ([sort_path] if sort_path is not None else [])
-        )
-        page = page_df.select("doc_id", "score", *page_cols).toPandas()
-        if sort_path is not None:
-            page = page.sort_values(
-                [sort_path, "doc_id"], ascending=[not sort_desc, True],
-                na_position="last",
-            ).reset_index(drop=True)
-        else:
-            sort_col = round_half_away(page["score"], 6) if group_by else page["score"]
-            page = (
-                page.assign(_sk=sort_col)
-                .sort_values(["_sk", "doc_id"], ascending=[False, True])
-                .drop(columns="_sk")
-                .reset_index(drop=True)
-            )
-        for df_ in getattr(scored, "_ses_persisted", ()):
-            df_.unpersist()  # WAND's phase-1 cache; page is materialized now
+                total, page = self._dist_eval(present, plan, k, skip, dv_pred)
         if highlight and len(page):
             hl = self._highlight_page(present, [int(d) for d in page["doc_id"]])
             page = page.merge(hl, on="doc_id", how="left")
-
-        if wand:
-            # WAND pruned the scored set; the exact total (the reference's
-            # $facet count) needs the unpruned match count — doc_ids only,
-            # no float math.  Single matched term: the count is its df,
-            # already in hand.  approx mode: Σdf upper bound, no decode.
-            if len(present) == 1 and not msm:
-                total = int(dfs[present[0]])
-            elif total_mode == "approx":
-                if conj:
-                    # intersection ≤ smallest term's df (tight upper bound)
-                    total = int(min(dfs.values()))
-                else:
-                    total = min(int(sum(dfs.values())), self.n_docs)
-            else:
-                total = self._match_count(present, conj, min_should_match=msm)
-        else:
-            total = scored.count()
-            scored.unpersist()
-        return SearchResult(total=total, page=page)
-
-    def _group_rollup(self, scored: DataFrame) -> DataFrame:
-        """Scored docs -> one row per group: the group's best hit + count.
-
-        Reference /v2/search semantics (app.py:488-520): sort by score,
-        group by g_id, $first the winner, count members.  The window
-        partitions by g_id — a keyed shuffle, never a global sort.  The
-        winner is picked on the ROUNDED score with the doc_id tiebreak
-        (the shared oracle rule), so float noise can't flip it.
-        """
-        from pyspark.sql import Window
-
-        g = scored.withColumn("g_id", F.pmod(F.col("dl"), F.lit(GROUP_MOD)).cast("int"))
-        w = Window.partitionBy("g_id").orderBy(
-            F.desc(F.round("score", 6)), F.asc("doc_id")
-        )
-        best = g.withColumn("rn", F.row_number().over(w))
-        counts = g.groupBy("g_id").agg(F.count("*").alias("n_docs"))
-        return (
-            best.filter(F.col("rn") == 1)
-            .select("g_id", "doc_id", "score")
-            .join(counts, "g_id")
-        )
-
-    def _match_count(
-        self, terms: list[str], conjunctive: bool, min_should_match: int = 0
-    ) -> int:
-        """Total match count without decoding scores.
-
-        Disjunctive counts need distinct doc_ids across terms, which requires
-        a decode of doc_ids only (cheap: no float math); conjunctive likewise.
-        Done as a distributed aggregate, not a collect.
-        """
-
-        def docs_only(it):
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                outs = []
-                for t, buf in zip(pdf["term"], pdf["postings"]):
-                    doc_ids, _, _ = decode_postings(buf)
-                    outs.append(pd.DataFrame({"doc_id": doc_ids, "term": t}))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-        segs = self._candidate_segments(terms).select("term", "postings")
-        docs = segs.mapInPandas(docs_only, schema="doc_id long, term string")
-        if conjunctive:
-            agg = docs.groupBy("doc_id").agg(F.count("*").alias("nt"))
-            return agg.filter(F.col("nt") == len(terms)).count()
-        if min_should_match:
-            agg = docs.groupBy("doc_id").agg(F.count("*").alias("nt"))
-            return agg.filter(F.col("nt") >= min_should_match).count()
-        return docs.select("doc_id").distinct().count()
+        res = SearchResult(total=total, page=page)
+        return self._with_urls(res) if with_url else res
 
     # ------------------------------------------------------------------ WAND
     def _wand_meta(self, terms: list[str]) -> pd.DataFrame:
@@ -2740,32 +2374,29 @@ class SearchEngine:
             .toPandas()
         )
 
-    def _wand_scored(
-        self,
-        terms: list[str],
-        idf: dict[str, float],
-        conjunctive: bool,
-        constant_boost: bool,
-        avail_boost: bool,
-        k: int,
-        boost_ceiling: float,
-        min_should_match: int = 0,
-        meta: pd.DataFrame | None = None,
-        avgdl_map: dict[str, float] | None = None,
-    ) -> DataFrame:
-        """Distributed block-max WAND over the global doc-id grid.
+    def _wand(
+        self, terms: list[str], plan: _Plan, k: int, meta: pd.DataFrame | None = None,
+        boost_ceiling: float = 0.0, exact: bool = True,
+    ) -> pd.DataFrame:
+        """Distributed block-max WAND over the global doc-id grid -> the
+        page partials (top k) plus count rows.
 
         Block metadata (term, sseg, max_tf_norm, doc_count — NOT postings) is
         a cheap columnar read.  Range upper bound = Σ_t idf_t · max block
-        tf_norm in that range (+ boost ceiling).  Phase 1 scores the top
-        ranges exactly to establish θ = kth best score; phase 2 scores only
-        ranges whose bound ≥ θ, with per-block pruning inside.
+        tf_norm in that range (+ boost ceiling).  Phase 1 folds the top
+        ranges in one kernel pass to establish θ = kth best score; phase 2
+        is one more pass that folds the ranges whose bound ≥ θ, pruning
+        blocks inside them.  With ``exact`` phase 2 also visits the ranges
+        below θ and decodes every pruned block for doc ids only, so its
+        count rows make the total exact.
         """
         self.last_wand = None
         if meta is None:
             meta = self._wand_meta(terms)
         if meta.empty:
-            return self._scored_docs(terms, idf, avgdl_map=avgdl_map)
+            return self._scan_ranges(terms, plan)
+        idf = plan.idf
+        conjunctive, min_should_match = bool(plan.must), plan.msm
         meta["ub"] = meta["term"].map(idf).fillna(0.0) * (meta["mtn"] * self.bound_scale)
         by_range = meta.groupby("sseg").agg(
             ub=("ub", "sum"), dc=("dc", "sum"), nterms=("term", "nunique")
@@ -2777,9 +2408,7 @@ class SearchEngine:
             by_range = by_range[by_range["nterms"] >= min_should_match]
         if by_range.empty:
             # no range can satisfy the clause requirement -> empty result
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double, n_terms int, dl int"
-            )
+            return _emit(plan, *_fold(plan, {}), None)
         # per-range ACHIEVABLE floor: idf·mtn is attained by the doc
         # realizing the block max, and distinct ranges hold distinct docs, so
         # the k-th largest per-range achievable is a sound lower bound on the
@@ -2811,7 +2440,7 @@ class SearchEngine:
             # OVER-estimates what a smaller-avgdl field's doc can actually
             # score — still a sound UPPER bound (pruning stays exact) but
             # not an achievable FLOOR; those rely on phase-1's exact θ.
-            and (avgdl_map is None or self.per_field_mtn)
+            and (not self.fields or self.per_field_mtn)
             and len(best_per_range) >= k
             and self.floor_scale > 0.0
         ):
@@ -2826,7 +2455,7 @@ class SearchEngine:
         by_range["ub_total"] = by_range["ub"] + boost_ceiling
 
         # per-(term, range) residual bound: what the OTHER terms could add in
-        # that range — needed for sound per-block pruning inside _scored_docs
+        # that range — needed for sound per-block pruning inside the kernel
         range_ub = by_range["ub"].to_dict()
         rest_bounds = {
             (r["term"], int(s)): float(range_ub.get(s, 0.0) - r["ub"])
@@ -2837,31 +2466,8 @@ class SearchEngine:
         cum = by_range["dc"].cumsum()
         n1 = int(np.searchsorted(cum.to_numpy(), k) + 1)
         phase1 = by_range.index[:n1].tolist()
-
-        def exact(ssegs, theta=None):
-            s = self._scored_docs(
-                terms, idf, ssegs=ssegs, theta=theta,
-                boost_ceiling=boost_ceiling, rest_bounds=rest_bounds,
-                avgdl_map=avgdl_map,
-            )
-            if conjunctive:
-                s = s.filter(F.col("n_terms") == len(terms))
-            elif min_should_match:
-                s = s.filter(F.col("n_terms") >= min_should_match)
-            return self._apply_boosts(s, constant_boost, avail_boost)
-
-        # phase 1 is both the θ probe AND one branch of the final union —
-        # persist it so the final plan reuses the computed scores instead of
-        # re-decoding phase 1's blocks (measured: the re-execution was a
-        # whole extra Spark job, half of WAND's fixed overhead at 10^6 docs).
-        # The caller unpersists via the frame's _ses_persisted attribute
-        # after materializing the page.
-        p1 = exact(phase1).persist()
-        top1 = (
-            p1.orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-            .toPandas()
-        )
+        p1 = self._scan_ranges(terms, plan, ssegs=phase1)
+        _, top1 = _merge_page(plan, p1, k, 0)
         if len(top1) < k:
             # phase 1 alone can't establish θ; the achievable floor (when
             # sound — plain disjunctions only) still can
@@ -2871,9 +2477,10 @@ class SearchEngine:
             if theta_floor is not None and theta_floor > theta:
                 theta = theta_floor
 
-        rest = by_range.index[n1:]
+        rest = [int(s) for s in by_range.index[n1:]]
+        alive = rest
         if theta is not None:
-            rest = [s for s in rest if by_range.loc[s, "ub_total"] >= theta]
+            alive = [s for s in rest if by_range.loc[s, "ub_total"] >= theta]
         # bench/test introspection (mirrors last_dispatch): which θ pruned
         # and how much of the range set survived it
         self.last_wand = {
@@ -2881,12 +2488,13 @@ class SearchEngine:
             "theta": theta,
             "n_ranges": int(len(by_range)),
             "n_phase1": int(n1),
-            "n_rest_alive": int(len(rest)),
+            "n_rest_alive": int(len(alive)),
         }
-        if len(rest) == 0:
-            out = p1
-        else:
-            # score surviving ranges with block-level pruning, union phase 1
-            out = p1.unionByName(exact(list(rest), theta=theta))
-        out._ses_persisted = [p1]  # noqa: SLF001 — local cleanup protocol
-        return out
+        scan = rest if exact else alive
+        if not scan:
+            return p1
+        p2 = self._scan_ranges(terms, replace(
+            plan, theta=theta, rest_bounds=rest_bounds, boost_ceiling=boost_ceiling,
+            bound_scale=self.bound_scale, scored=frozenset(alive), exact_count=exact,
+        ), ssegs=scan)
+        return pd.concat([p1, p2], ignore_index=True)

@@ -8,8 +8,14 @@ code runs unchanged under ``spark-submit --py-files`` on a real cluster.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+
+# the master URL forms spark-submit accepts (bin/spark-submit exports the
+# --master value as MASTER)
+_MASTER_URL = re.compile(r"(local(-cluster)?(\[[^\]]+\])?|spark://.+|yarn|k8s://.+|mesos://.+)")
 
 
 def get_spark(
@@ -56,7 +62,11 @@ def get_spark(
     # bin/spark-submit exports MASTER.  Either signal means the master is
     # external and calling .master() here would override it (code-level conf
     # outranks submit flags) — collapsing a cluster job onto the driver.
-    external_master = os.environ.get("PYSPARK_GATEWAY_PORT") or os.environ.get("MASTER")
+    # MASTER counts only when it parses as a master URL: a stray MASTER set
+    # by unrelated tooling must not leave the session without a master.
+    external_master = os.environ.get("PYSPARK_GATEWAY_PORT") or _MASTER_URL.fullmatch(
+        os.environ.get("MASTER", "")
+    )
     builder = SparkSession.builder
     if not external_master:
         builder = builder.master(f"local[{cpus}]")

@@ -878,3 +878,110 @@ def test_number_facet_default_bucket(dv_engine, dv_oracle, dv_attrs, dv_term):
             facets={"x": {"type": "number", "path": "n_chars",
                           "boundaries": b, "default": str(b[0])}},
         )
+
+
+# ------------------------------------------- per-range kernel: exact merge
+def test_sort_nulls_spread_across_ranges(dv_engine, dv_oracle, dv_attrs, dv_term):
+    """Null attributes from several ranges merge LAST in doc_id order, on
+    both physical paths, including a page straddling the null boundary."""
+    should = [("title", dv_term), ("body", dv_term)]
+    rd = int(dv_engine.stats["range_docs"])
+    hits, total = _sorted_hits(dv_oracle, dv_attrs, "lang", False, should=should)
+    nulls = [d for d, _ in hits if dv_attrs[d]["lang"] is None]
+    assert len({d // rd for d in nulls}) > 1
+    for desc in (True, False):
+        _check_sorted(dv_engine, dv_oracle, dv_attrs, "lang", desc, k=total,
+                      should=should)
+        _check_sorted(dv_engine, dv_oracle, dv_attrs, "lang", desc, k=6,
+                      skip=total - len(nulls) - 3, should=should)
+
+
+def test_facet_bucket_summed_across_ranges(dv_engine, dv_oracle, dv_attrs, dv_term):
+    """Each range counts its own docs' buckets; the driver sums them."""
+    from collections import Counter
+
+    should = [("title", dv_term), ("body", dv_term)]
+    rd = int(dv_engine.stats["range_docs"])
+    matched = _oracle_matched(dv_oracle, should=should)
+    assert len({d // rd for d in matched if dv_attrs[d]["lang"] == "en"}) > 1
+    out = dv_engine.facet_fields(
+        should=should, facets={"langs": {"type": "string", "path": "lang"}}
+    )
+    exp = Counter(dv_attrs[d]["lang"] for d in matched if dv_attrs[d]["lang"])
+    got = dict(zip(out["facet"]["langs"]["bucket"], out["facet"]["langs"]["count"]))
+    assert {b: int(c) for b, c in got.items()} == dict(exp)
+    assert out["count"] == len(matched)
+
+
+@pytest.mark.parametrize(
+    "kw,extra",
+    [
+        ("", {}),  # analyzes to no terms
+        ("zzq*", {"wildcard": True}),  # wildcard expanding to nothing
+        ("zzzzqqqq", {}),  # absent term: empty prefix expansion
+        ("oil zzzzqqqq", {"conjunctive": True}),  # absent required term
+    ],
+)
+def test_single_field_empty_sorted_page_keeps_sort_column(spark, sf_dv_index, kw, extra):
+    """search(kw, sort=...) early exits keep the documented page shape."""
+    from search_engine_spark.query.engine import SearchEngine
+
+    eng = SearchEngine(spark, sf_dv_index)
+    for fd in (False, True):
+        res = eng.search(kw, sort={"path": "warc_ts", "order": "desc"},
+                         force_distributed=fd, **extra)
+        assert res.total == 0
+        assert list(res.page.columns) == ["doc_id", "score", "warc_ts"], (kw, fd)
+
+
+def _spark_jobs(spark, call) -> int:
+    """Spark jobs one call submits: a fresh job group, read back through
+    statusTracker once the (asynchronous) status store has settled."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    n, deadline = -1, time.time() + 10
+    while time.time() < deadline:
+        m = len(st.getJobIdsForGroup(gid))
+        if m == n:
+            break
+        n = m
+        time.sleep(0.3)
+    return n
+
+
+# one kernel call per phase: a shuffle map job per input (blocks, plus the
+# doc_stats rows when doc values are needed) and one result job; auto adds
+# the block-metadata read, WAND a second kernel phase
+_JOB_CAPS = {"sort": 2, "dv_filter": 3, "sort_field": 3, "facet": 3,
+             "mf_dv": 3, "auto": 4, "wand": 6}
+
+
+@pytest.mark.parametrize("shape", sorted(_JOB_CAPS))
+def test_distributed_jobs_per_shape(spark, sf_dv_index, dv_engine, dv_term, shape):
+    from search_engine_spark.query.engine import SearchEngine
+
+    eng = SearchEngine(spark, sf_dv_index)
+    fd = {"force_distributed": True}
+    en = [{"equals": {"path": "lang", "value": "en"}}]
+    calls = {
+        "sort": lambda: eng.search("the oil", mode="sort", **fd),
+        "wand": lambda: eng.search("the oil", mode="wand", **fd),
+        "auto": lambda: eng.search("the oil", mode="auto", **fd),
+        "dv_filter": lambda: eng.search("the oil", dv_filter=en, **fd),
+        "sort_field": lambda: eng.search("the oil", sort={"path": "warc_ts"}, **fd),
+        "facet": lambda: eng.facet_fields(
+            keyword="the oil", facets={"l": {"type": "string", "path": "lang"}}),
+        "mf_dv": lambda: dv_engine.search_fields(
+            should=[("title", dv_term), ("body", dv_term)], filter=en, **fd),
+    }
+    calls[shape]()  # warm: first-call planning must not hide in the count
+    assert 0 < _spark_jobs(spark, calls[shape]) <= _JOB_CAPS[shape], shape

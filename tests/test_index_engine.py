@@ -243,3 +243,92 @@ def test_fuzzy_rank_identity_wand_mode(engine, oracle_tiny, kw, f):
     got = engine.search(kw, k=10, fuzzy=f, mode="wand", force_distributed=True)
     want = oracle_tiny.search_fuzzy(kw, k=10, fuzzy=f)
     assert_rank_identical(got, want, f"fuzzy-wand {kw} f={f}")
+
+
+# ------------------------------------------- per-range kernel: exact merge
+# The distributed plan folds each doc range (sseg) on its own and merges the
+# ranges' partial results on the driver; these cases put the merge's edges
+# on ranges the fixture is known to split.
+
+def _range_of(engine):
+    rd = int(engine.stats["range_docs"])
+    return lambda d: int(d) // rd
+
+
+@pytest.mark.parametrize("mode", ["sort", "wand"])
+def test_tie_at_page_boundary_across_ranges(engine, oracle_tiny, mode):
+    """Equal scores on both sides of the page cut, in different ranges:
+    the doc_id tiebreak decides, exactly as the oracle's."""
+    rng = _range_of(engine)
+    for kw in ("the", "milk", "oil"):
+        hits = oracle_tiny.search(kw, k=10**6).hits
+        cut = next(
+            (i for i in range(1, len(hits))
+             if hits[i - 1][1] == hits[i][1] and rng(hits[i - 1][0]) != rng(hits[i][0])),
+            None,
+        )
+        if cut is not None:
+            break
+    assert cut is not None, "fixture has no cross-range score tie"
+    got = engine.search(kw, k=cut, mode=mode, force_distributed=True)
+    assert_rank_identical(got, oracle_tiny.search(kw, k=cut), label=f"tie:{kw!r}@{cut}")
+
+
+@pytest.mark.parametrize("kw", ["milk", "cadbury dairy milk"])
+def test_skip_deeper_than_any_range(engine, oracle_tiny, kw):
+    """A page that starts past every single range's match count comes only
+    from the global merge of all ranges' top-(skip+k)."""
+    from collections import Counter
+
+    rng = _range_of(engine)
+    full = oracle_tiny.search(kw, k=10**6)
+    skip = max(Counter(rng(d) for d, _ in full.hits).values()) + 3
+    assert skip + 5 <= full.total
+    got = engine.search(kw, k=5, skip=skip, force_distributed=True)
+    assert_rank_identical(got, oracle_tiny.search(kw, k=5, skip=skip), label=f"skip={skip}")
+
+
+def test_group_split_across_ranges(engine, oracle_tiny):
+    """Every group on the page has members in several ranges: its winner
+    is the best of the ranges' winners and its count the ranges' sum."""
+    from search_engine_spark.query.engine import GROUP_MOD
+
+    rng = _range_of(engine)
+    kw = "the"
+    spans: dict = {}
+    for d, _ in oracle_tiny.search(kw, k=10**6).hits:
+        spans.setdefault(oracle_tiny.doc_len[d] % GROUP_MOD, set()).add(rng(d))
+    for skip in (0, 7):
+        total, rows = oracle_tiny.search_grouped(kw, k=10, skip=skip)
+        assert rows and all(len(spans[g]) > 1 for g, _, _, _ in rows)
+        got = engine.search(kw, k=10, skip=skip, group_by=True, force_distributed=True)
+        assert got.total == total
+        assert [
+            (int(r.g_id), int(r.doc_id), round(float(r.score), 6), int(r.n_docs))
+            for r in got.page.itertuples()
+        ] == [(g, d, round(s, 6), n) for g, d, s, n in rows]
+
+
+@pytest.mark.parametrize(
+    "kw,opts",
+    [
+        ("the oil", {}),
+        ("cadbury dairy milk", {}),
+        ("milk oil", {"conjunctive": True}),
+        ("cadbury dairy milk", {"min_should_match": 2}),
+        ("milk rice", {"constant_boost": True, "avail_boost": True}),
+    ],
+)
+def test_wand_exact_total_equals_sort_total(engine, kw, opts):
+    """WAND's exact total counts the pruned blocks' docs (doc-id-only
+    decode in phase 2): it equals the unpruned sort plan's total, and the
+    pages agree bit for bit."""
+    w = engine.search(kw, k=5, mode="wand", force_distributed=True, **opts)
+    lw = engine.last_wand
+    s = engine.search(kw, k=5, mode="sort", force_distributed=True, **opts)
+    assert w.total == s.total > 0
+    assert list(w.page["doc_id"]) == list(s.page["doc_id"])
+    np.testing.assert_array_equal(w.page["score"].to_numpy(), s.page["score"].to_numpy())
+    if lw is not None and kw == "the oil":
+        # ranges below θ really were skipped for scoring, yet counted
+        assert lw["n_phase1"] + lw["n_rest_alive"] < lw["n_ranges"]
